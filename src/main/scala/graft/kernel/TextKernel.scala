@@ -186,10 +186,10 @@ object TextKernel {
     * lightweight instrumentation (one atomic add per doc, noise next
     * to the per-gram digests) that lets LlmOpsSpec PIN the
     * evaluated-exactly-once contract of winnowSimilarityPairs'
-    * fingerprint pass: Catalyst exchange reuse deduping the three
-    * consumers is plan-shape-fragile, so the op localCheckpoints and
-    * the spec asserts calls == docs. Per-JVM (local-mode tests see
-    * the true total; on a cluster it is per-executor).
+    * fingerprint pass: its (id, fp) rows feed one exchange and one
+    * consumer, and the spec asserts calls == docs. Per-JVM
+    * (local-mode tests see the true total; on a cluster it is
+    * per-executor).
     */
   private[graft] val winnowCalls = new java.util.concurrent.atomic.AtomicLong
 

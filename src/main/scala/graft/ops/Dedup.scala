@@ -998,18 +998,28 @@ object Dedup {
     * lifted into an otherwise-unrelated doc) that whole-doc Jaccard
     * dilutes below threshold.
     *
-    * Scale shape: the fingerprint exchange carries (doc_id, fp) keys
-    * only — text never shuffles; fingerprints whose document frequency
-    * exceeds `maxDf` are dropped BEFORE the pair join (standard MOSS
-    * practice — boilerplate shared by everything carries no signal),
-    * which bounds every fp bucket's pair fan-out at maxDf², so no
-    * degenerate fingerprint can produce a quadratic task (the LSH
-    * hot-bucket lesson enforced by construction rather than by a
-    * split).
+    * Plan shape: ONE (id, fp) exchange, then group streaming — the
+    * bucket-local form of [[minhashPairs]]' verify. The fingerprint
+    * rows are hash-partitioned on fp and sorted within each partition,
+    * so every fp group arrives contiguous; text never shuffles. Each
+    * group is read once: df counts ALL its rows (a null id or a
+    * repeated doc_id counts too), and when 2 ≤ df ≤ maxDf every row
+    * pair whose ids differ emits (min, max) — the multiset the
+    * `id_a < id_b` self-join of the keys produces (a null id never
+    * pairs; equal ids never pair). Fingerprints with df > maxDf are
+    * dropped (standard MOSS practice — boilerplate shared by
+    * everything carries no signal): the stream stops buffering at a
+    * group's (maxDf + 1)-th row, so a group holds at most maxDf ids
+    * and emits at most maxDf·(maxDf − 1)/2 pairs — no degenerate
+    * fingerprint can produce a quadratic task (the LSH hot-bucket
+    * lesson enforced by construction rather than by a split). The
+    * pair counts then take one (id_a, id_b) aggregate. Nothing is
+    * persisted: the per-doc fingerprint UDF runs once per document
+    * because the fingerprint rows have exactly one consumer.
     *
     * Sizing (r10 verdict #4 — the 5M-doc WinnowScaleProbe run used to
     * need a manual WINNOW_PARTS=256 env or it OOM'd at the session's
-    * 32 shuffle partitions): the fingerprint exchange is now
+    * 32 shuffle partitions): the fingerprint exchange is
     * AUTO-SIZED from Catalyst's size estimate of the input — winnow
     * density is 2/(w+1) fingerprints per character (the published
     * expected density of the scheme), so estimated exchange rows ≈
@@ -1031,13 +1041,6 @@ object Dedup {
     * select DIFFERENT window minima, so their pair sets are each
     * internally consistent but not identical — production output is
     * not oracle-comparable (by design, like x13's).
-    *
-    * The fingerprint set is localCheckpointed: it feeds the df
-    * aggregate and BOTH sides of the pair self-join, and the per-gram
-    * digest UDF is the dominant map cost — relying on Catalyst
-    * exchange reuse to dedup the three scans is plan-shape-fragile,
-    * so the keys-only (id, fp) set is materialized exactly once
-    * (LlmOpsSpec pins the single evaluation with a UDF call counter).
     *
     * Returns (id_a, id_b, n_shared), id_a < id_b.
     */
@@ -1071,38 +1074,32 @@ object Dedup {
     val estRows = estBytes.toDouble * 2.0 / (w + 1).toDouble
     val parts = math.min(4096,
       math.max(sessionParts, math.ceil(estRows / 2e6).toInt))
-    val fps = docs.select(col(idCol).cast("long").as("id"),
+    import spark.implicits._
+    docs.select(col(idCol).cast("long").as("id"),
         explode(fpUdf(col(textCol))).as("fp"))
       .repartition(parts, col("fp"))
-      // persist(), NOT eager localCheckpoint (r14): the three
-      // consumers (df aggregate + both pair-join sides) each re-read
-      // this frame, and checkpoint blocks are RAW row batches — x17
-      // measured 2.4 GB of block reads per run, vs 334 MB from the
-      // columnar-compressed InMemoryRelation (shuffle shape identical
-      // either way: one 214 MB fp exchange, then the joins and the
-      // pair aggregate ride the cached hash(fp) partitioning and emit
-      // 4.7 MB, per-stage measured). persist also keeps lineage, so
-      // lost blocks recompute on a real cluster instead of failing
-      // the job — the GraphRank static-frame rule. Single-evaluation
-      // contract unchanged (LlmOpsSpec's UDF call counter pins
-      // calls == docs either way).
-      // LIFECYCLE (ADVICE r14): the result is returned lazily, so this
-      // entry cannot be unpersisted here — it stays in the cache
-      // manager until evicted (LRU) or the session ends. Long-lived
-      // sessions calling this repeatedly should
-      // `spark.catalog.clearCache()` (or unpersist via
-      // spark.sharedState.cacheManager) between batches; at ~334 MB
-      // of columnar blocks per call the storage pool's LRU eviction
-      // otherwise absorbs the turnover.
-      .persist()
-    val rare = fps.groupBy(col("fp"))
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf && col("df") >= 2)
-      .select("fp")
-    val kept = fps.join(rare, "fp")
-    kept.select(col("fp"), col("id").as("id_a"))
-      .join(kept.select(col("fp"), col("id").as("id_b")), Seq("fp"))
-      .filter(col("id_a") < col("id_b"))
+      .sortWithinPartitions(col("fp"))
+      .as[(Option[Long], Long)]
+      .mapPartitions { rows =>
+        // stream sorted fp groups; df counts every row, ids buffer
+        // only while df ≤ maxDf (a larger group is dropped anyway)
+        val in = rows.buffered
+        val ids = new Array[Long](maxDf)
+        Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+          val fp = in.head._2
+          var df = 0
+          var n = 0
+          while (in.hasNext && in.head._2 == fp) {
+            val id = in.next()._1
+            if (df < maxDf && id.isDefined) { ids(n) = id.get; n += 1 }
+            df += 1
+          }
+          if (df < 2 || df > maxDf) Iterator.empty
+          else (for (i <- 0 until n; j <- i + 1 until n if ids(i) != ids(j))
+            yield (math.min(ids(i), ids(j)), math.max(ids(i), ids(j)))).iterator
+        }
+      }
+      .toDF("id_a", "id_b")
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)

@@ -159,16 +159,19 @@ object LmScore {
       uniMap.put(r.getString(0), Array(r.getLong(1), nextId)); nextId += 1L
     }
     val bigRows = model.bigModel.collect()
-    // (key, c2, c1_prev) sorted by key; a bigram whose prev/w is not
-    // in the unigram table (impossible for trainStupidBackoff output,
-    // where both are reference tokens) could never be LOOKED UP via
-    // ids either, so skipping such a row is behavior-identical
+    // (key, c2, c1_prev) sorted by key. Every bigram token must be in
+    // the unigram table (trainStupidBackoff output always is: both are
+    // reference tokens); the join path would still score a bigram it
+    // cannot key by id here, so a model without that coverage fails
+    // loudly instead of scoring differently on the two paths
     val trips = new java.util.ArrayList[Array[Long]](bigRows.length)
     bigRows.foreach { r =>
       val p = uniMap.get(r.getString(0))
       val w = uniMap.get(r.getString(1))
-      if (p != null && w != null)
-        trips.add(Array((p(1) << 32) | w(1), r.getLong(2), r.getLong(3)))
+      require(p != null && w != null,
+        s"bigram (${r.getString(0)}, ${r.getString(1)}) has a token " +
+          "missing from the unigram table")
+      trips.add(Array((p(1) << 32) | w(1), r.getLong(2), r.getLong(3)))
     }
     trips.sort((x: Array[Long], y: Array[Long]) =>
       java.lang.Long.compare(x(0), y(0)))

@@ -1797,7 +1797,7 @@ object LlmPipeline {
       (s, d) => Tables.documents(s, d)
         .select(col("doc_id"),
           TextStats.normalizeText(
-            concat(lit("  "), col("text"), lit("\t\t tail!")))
+            concat(lit("  "), col("text"), lit("\t\t tail\u0007!")))
             .as("norm_text"))
         .withColumn("norm_len", length(col("norm_text")).cast("long")),
       Some("""SELECT doc_id,
@@ -3329,8 +3329,8 @@ object LlmPipeline {
     // ≥minShared guaranteed-detected shared substrings of length
     // ≥ k+w−1. Catches partial containment (a lifted paragraph) that
     // whole-doc Jaccard dilutes. df-pruning (2 ≤ df ≤ 8) bounds every
-    // fingerprint bucket BEFORE the pair join — boilerplate can't
-    // create a quadratic task by construction.
+    // fingerprint group BEFORE it is paired — boilerplate can't create
+    // a quadratic task by construction.
     QueryDef(
       "l81_winnow_similarity",
       (s, d) => Dedup.winnowSimilarityPairs(
@@ -3431,7 +3431,7 @@ object LlmPipeline {
         // silently reusing a stale tmpdir .warc.gz written by an older
         // build (r12 advice).
         val tver = java.lang.Integer.toHexString(
-          (WarcHtmlParts.mkString(" ") + WarcHttpHeader).hashCode)
+          (WarcHtmlParts.mkString("\u0000") + WarcHttpHeader).hashCode)
         val path = new java.io.File(sys.props("java.io.tmpdir"),
           "graft_l84_" + tver + "_" + new java.io.File(d).getAbsolutePath
             .replaceAll("[^A-Za-z0-9]", "_") + ".warc.gz")

@@ -1,24 +1,29 @@
 package graft.kernel
 
+import graft.SparkFixture
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[HtmlKernel.htmlToText]] bit-identical to the
   * [[graft.ops.Html.Steps]] regexp_replace chain it replaces (r15):
-  * the reference below applies each step with java.util.regex exactly
-  * as Spark's regexp_replace does (Matcher.replaceAll; the
-  * replacement strings contain no `$`/`\` so no escaping divergence),
-  * then String.trim — the same operators Catalyst compiles the
-  * expression chain to.
+  * the reference is [[graft.ops.Html.htmlToTextExpr]] — the chain's
+  * regexp_replace passes, then Spark's own `trim` — evaluated by
+  * Spark, the same expressions the SQL `html_to_text` function and
+  * the l84 DuckDB oracle compute.
   */
 class HtmlKernelSpec extends AnyFunSuite {
+  private lazy val spark = SparkFixture.spark
 
-  private def reference(s: String): String =
-    graft.ops.Html.Steps.foldLeft(s) { case (acc, (pat, rep)) =>
-      java.util.regex.Pattern.compile(pat).matcher(acc).replaceAll(rep)
-    }.trim
-
-  private def check(s: String): Unit =
-    assert(HtmlKernel.htmlToText(s) == reference(s), s"input: ${s.take(200)}")
+  private def check(inputs: Seq[String]): Unit = {
+    import spark.implicits._
+    val ref = inputs.toDF("s")
+      .select(graft.ops.Html.htmlToTextExpr(col("s")))
+      .as[String].collect()
+    assert(ref.length == inputs.length)
+    inputs.zip(ref).foreach { case (s, r) =>
+      assert(HtmlKernel.htmlToText(s) == r, s"input: ${s.take(200)}")
+    }
+  }
 
   test("adversarial fixtures match the regex chain exactly") {
     val cases = Seq(
@@ -57,7 +62,8 @@ class HtmlKernelSpec extends AnyFunSuite {
       // whitespace: every \s member, non-\s controls at the edges,
       // unicode spaces that Java \s does NOT cover
       " \t\n\u000B\f\r mixed   runs \t ",
-      "\u0001leading control survives collapse, dies in trim\u0001",
+      "\u0001edge controls survive collapse and trim\u0001",
+      " \u0001 spaces go, the control stays \u001f ",
       "\u00a0nbsp-char is not \\s\u00a0",
       "e\u0301 combining, \u1e9e unicode sharp s",
       // full documents
@@ -69,7 +75,13 @@ class HtmlKernelSpec extends AnyFunSuite {
       // ASCII-only)
       "<\u017fcript>long-s is not script</\u017fcript>",
       "<scrip\u212a>kelvin</scrip\u212a>")
-    cases.foreach(check)
+    check(cases)
+  }
+
+  test("trim strips only U+0020: edge control characters are kept") {
+    assert(HtmlKernel.htmlToText("\u0001 x \u0001") == "\u0001 x \u0001")
+    assert(HtmlKernel.htmlToText(" <p>\u0000a</p>\t") == "\u0000a")
+    check(Seq("\u0001 x \u0001", " <p>\u0000a</p>\t"))
   }
 
   test("randomized html-ish soup matches the regex chain exactly") {
@@ -79,11 +91,10 @@ class HtmlKernelSpec extends AnyFunSuite {
       "&lt;", "&gt;", "&quot;", "&#39;", "&nbsp;", "&amp;", "&", ";",
       "word", "x y", " ", "\t", "\n", "\r", "\u000B", "\f", "\u00a0",
       "\u0001", "text<scr", "ipt>", "</scr", "ript>")
-    (0 until 500).foreach { _ =>
+    check((0 until 500).map { _ =>
       val n = rnd.nextInt(30)
-      val s = (0 until n).map(_ => atoms(rnd.nextInt(atoms.length))).mkString
-      check(s)
-    }
+      (0 until n).map(_ => atoms(rnd.nextInt(atoms.length))).mkString
+    })
   }
 
   test("null propagates like the expression chain") {

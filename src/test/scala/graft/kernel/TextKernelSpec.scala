@@ -7,8 +7,8 @@ class TextKernelSpec extends AnyFunSuite {
 
   test("r14 splitWsNonEmpty is bit-identical to split(WsPlus).filter(_.nonEmpty)") {
     val cases = Seq(
-      "", " ", "  \t\n\f\r ", "a", " a", "a ", " a ",
-      "a b", "a  b", "a\tb\nc\rd\fef", "\t\ta  b\t",
+      "", " ", "  \t\n\u000B\f\r ", "a", " a", "a ", " a ",
+      "a b", "a  b", "a\tb\nc\rd\fe\u000Bf", "\t\ta  b\t",
       "word", "  leading and trailing  ",
       "unicode éü 😀 mix", "a b", // NBSP is NOT ws
       "ab\u000Bc", // vertical tab IS ws
@@ -20,7 +20,7 @@ class TextKernelSpec extends AnyFunSuite {
     }
     // randomized sweep over the full ws class + letters
     val rnd = new scala.util.Random(42)
-    val alphabet = "ab \t\n\f\r".toCharArray
+    val alphabet = "ab \t\n\u000B\f\r".toCharArray
     (1 to 500).foreach { _ =>
       val s = Array.fill(rnd.nextInt(40))(
         alphabet(rnd.nextInt(alphabet.length))).mkString
@@ -94,7 +94,7 @@ class TextKernelSpec extends AnyFunSuite {
     def ref(text: String): Long = {
       if (text == null) return 0L
       val toks = text.toLowerCase
-        .split("[ \t\n\f\r]+").filter(_.nonEmpty)
+        .split("[ \t\n\u000B\f\r]+").filter(_.nonEmpty)
       val votes = new Array[Int](60)
       val md = java.security.MessageDigest.getInstance("MD5")
       for (t <- toks) {

@@ -46,7 +46,7 @@ class CurationSpec extends AnyFunSuite {
     // UTF-16 units), digits, punctuation-adjacent, tabs/CR/vertical
     // tab, a token that is ONLY a stopword, very long token
     val rows = Seq(
-      null, "", "   ", "\t\n\f\r", "The Quick BROWN fox",
+      null, "", "   ", "\t\n\u000B\f\r", "The Quick BROWN fox",
       "thé café naïve", "abc😀def xyz",
       "123 abc 456", "a", "the", "ALLCAPS", "mIxEd",
       "word, with; punct!", "İstanbul I", // Turkish dotted I edge

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkFixture
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -548,10 +549,9 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("winnowSimilarityPairs: fingerprint UDF evaluates exactly once per doc") {
-    // r10 verdict #5: the fingerprint set feeds the df aggregate and
-    // BOTH sides of the pair self-join — without the localCheckpoint,
-    // whether Catalyst's exchange reuse dedups the three scans of the
-    // dominant md5-per-gram map was asserted nowhere. Pin it with the
+    // r10 verdict #5: the dominant md5-per-gram map must run once per
+    // document — the (id, fp) rows have one consumer (the fp
+    // exchange), so no plan rewrite may re-scan them. Pin it with the
     // kernel's per-doc call counter: exactly |docs| evaluations, not
     // 2× or 3×.
     import spark.implicits._
@@ -564,6 +564,93 @@ class LlmOpsSpec extends AnyFunSuite {
       .write.format("noop").mode("overwrite").save()
     val calls = graft.kernel.TextKernel.winnowCalls.get() - c0
     assert(calls == 40L, s"fingerprint UDF ran $calls times for 40 docs")
+  }
+
+  /** Reference twin of winnowSimilarityPairs: the df aggregate, a
+    * join back to the kept fingerprints and an fp self-join. */
+  private def winnowJoinForm(docs: DataFrame, k: Int, w: Int,
+      minShared: Int, maxDf: Int, exactHash: Boolean): DataFrame = {
+    val fpUdf =
+      if (exactHash) udf((t: String) =>
+        graft.kernel.TextKernel.winnowMd5Fingerprints(t, k, w))
+      else udf((t: String) =>
+        graft.kernel.TextKernel.winnowFingerprints(t, k, w))
+    val fps = docs.select(col("doc_id").cast("long").as("id"),
+      explode(fpUdf(col("text"))).as("fp"))
+    val rare = fps.groupBy(col("fp"))
+      .agg(count(lit(1)).as("df"))
+      .filter(col("df") <= maxDf && col("df") >= 2)
+      .select("fp")
+    val kept = fps.join(rare, "fp")
+    kept.select(col("fp"), col("id").as("id_a"))
+      .join(kept.select(col("fp"), col("id").as("id_b")), Seq("fp"))
+      .filter(col("id_a") < col("id_b"))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= minShared)
+  }
+
+  test("winnowSimilarityPairs equals the self-join form on df, minShared and id edges") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(81)
+    def word(): String = Seq.fill(6)(('a' + rnd.nextInt(26)).toChar).mkString
+    val maxDf = 4
+    // whole-text copies: every fingerprint of a group has df = its size
+    val atMax = "paragraph shared by exactly max df documents here"
+    val overMax = "paragraph shared by one document more than max df"
+    val dupPara = "text carried by a duplicated id and a null id too"
+    val nullOver = "four ids and a null id put this text over max df"
+    // a lifted paragraph after random prefixes: the windows that
+    // straddle the boundary give fingerprints shared by a subset
+    val lifted = "the quick brown fox jumps over the lazy dog again"
+    val rows: Seq[(Option[Long], Option[String])] =
+      (0L until 4L).map(i => (Some(i), Some(atMax))) ++
+      (10L until 15L).map(i => (Some(i), Some(overMax))) ++
+      (40L until 43L).map(i => (Some(i), Some(s"${word()} ${word()} $lifted"))) ++
+      ((50L until 54L).map(Option(_)) :+ None).map(i => (i, Some(nullOver))) ++
+      Seq(
+        (Some(20L), Some(dupPara)),
+        (Some(21L), Some(dupPara)),
+        (Some(21L), Some(dupPara)), // duplicated doc_id
+        (None, Some(dupPara)), // null id
+        (Some(30L), Some("")),
+        (Some(31L), None),
+        (Some(32L), Some("short")), // shorter than k
+        (None, None))
+    val docs = rows.toDF("doc_id", "text")
+    def collectPairs(df: DataFrame): Seq[(Long, Long, Long)] =
+      df.as[(Long, Long, Long)].collect().toSeq.sorted
+    spark.catalog.clearCache()
+    for (exactHash <- Seq(true, false)) {
+      val ref1 = collectPairs(winnowJoinForm(docs, 8, 4, 1, maxDf, exactHash))
+      val pairs1 = ref1.map(p => (p._1, p._2)).toSet
+      // df = maxDf is kept, df = maxDf + 1 dropped
+      assert(pairs1.contains((0L, 3L)), s"exactHash=$exactHash: $ref1")
+      assert(!pairs1.exists(p => p._1 >= 10L && p._2 < 15L),
+        s"exactHash=$exactHash: df > maxDf leaked: $ref1")
+      // a null id counts toward df
+      assert(!pairs1.exists(p => p._1 >= 50L && p._2 < 54L),
+        s"exactHash=$exactHash: null-id row not counted: $ref1")
+      // the duplicated id doubles n_shared against 20; it never pairs
+      // with itself, and the null id never pairs
+      val n2021 = ref1.find(p => p._1 == 20L && p._2 == 21L).map(_._3)
+      assert(n2021.exists(n => n >= 2L && n % 2L == 0L),
+        s"exactHash=$exactHash: $ref1")
+      assert(pairs1.contains((40L, 41L)), s"exactHash=$exactHash: $ref1")
+      assert(!ref1.exists(p => p._1 == p._2))
+      val nAt = ref1.find(p => p._1 == 0L && p._2 == 3L).get._3
+      for (minShared <- Seq(1, 2, nAt.toInt, nAt.toInt + 1)) {
+        val got = collectPairs(Dedup.winnowSimilarityPairs(docs, "doc_id",
+          "text", k = 8, w = 4, minShared = minShared, maxDf = maxDf,
+          exactHash = exactHash))
+        val ref = collectPairs(
+          winnowJoinForm(docs, 8, 4, minShared, maxDf, exactHash))
+        assert(got == ref, s"exactHash=$exactHash minShared=$minShared")
+        assert(got.exists(p => p._1 == 0L && p._2 == 3L) == (minShared <= nAt))
+      }
+    }
+    // the op persists nothing, so a long-lived session keeps no blocks
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("winnowFingerprintCountExact kernel matches the original column formulation") {

@@ -76,4 +76,16 @@ class LmScoreSpec extends AnyFunSuite {
       .collect()(0).getDouble(2)
     assert(math.abs(oov - math.log10(0.1 / 8.0)) < 1e-12)
   }
+
+  test("broadcast path rejects a bigram token missing from the unigram table") {
+    import spark.implicits._
+    val model = LmScore.trainStupidBackoff(ref, "text")
+    val stray = Seq(("a", "qq", 1L, 2L)).toDF("prev", "w", "c2", "c1_prev")
+    val bad = model.copy(bigModel = model.bigModel.unionByName(stray))
+    val docs = Seq((1L, "a qq")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      LmScore.scoreWithBroadcastModel(docs, bad, "doc_id", "text")
+    }
+    assert(e.getMessage.contains("(a, qq)"))
+  }
 }
